@@ -1,4 +1,4 @@
-"""Angles (G3/G4) — SQL and vectorized forms.
+"""Angles (G3/G4) and dihedrals — SQL and vectorized forms.
 
 Semantics per the reference's pure-array path
 (``/root/reference/dask_traj/geometry/angle.py:142-176``): for each
@@ -6,30 +6,32 @@ triplet (i, j, k), u = MIC(r_i − r_j), v = MIC(r_k − r_j), angle =
 arccos(û · v̂). Returned in radians, float32, as
 (frame_id, triplet_id, angle_rad).
 
-SQL form: three broadcast-pair joins stitched per frame + a codegen'd
-acos expression. Vectorized form: the numpy kernel over packed
-frame blocks (see distance.py's vectorized-forms section) — zero
-shuffles when the trajectory is already frame-packed.
+Both forms come from the shared geometry core in ``distance.py``:
+the SQL form is the role stitch (:func:`_role_coords_sql`) + the leg
+displacements (:func:`_add_legs`) + a codegen'd acos/atan2
+expression; the vectorized form is :func:`_vectorized_op` running
+the numpy kernel over packed frame blocks — zero shuffles when the
+trajectory is already frame-packed.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from dask_traj_spark import schemas
 from dask_traj_spark.operators import kernels
 from dask_traj_spark.operators.distance import (
-    _VECTORIZED_THRESHOLD,
-    _add_displacement,
-    _block_arrays,
-    _iter_frame_blocks,
+    _add_legs,
     _normalize_indices,
-    _packed_input,
-    _pairs_df,
+    _resolve_form,
+    _role_coords_sql,
+    _vectorized_op,
+    compute_distances,
 )
+
+_DIHEDRALS_SCHEMA = "frame_id long, quartet_id int, dihedral_rad float"
 
 
 def compute_angles(
@@ -47,78 +49,25 @@ def compute_angles(
     SQL plan shape: ONE three-way stitch — broadcast the triplet
     table onto the mid-atom rows, then join the i- and k-atom rows by
     (frame_id, atom) — so the coords lineage is scanned three times
-    (once per role), not four as the former two-pair-leg form did,
-    and both MIC applications share a single box join.
+    (once per role), and both MIC applications share a single box
+    join.
     """
     arr = _normalize_indices(angle_indices, 3, n_atoms or traj.n_atoms, "angle_indices")
+    form = _resolve_form(form, len(arr))
     if len(arr) == 0:  # empty short-circuit (angle.py:98-99)
         return traj.spark.createDataFrame([], schemas.ANGLES_SCHEMA)
-    if _round6_double:
-        form = "sql"  # the rounding knob only exists on the SQL path
-    if form == "auto":
-        form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
-    if form == "vectorized":
-        return _vectorized_angles(traj, arr, periodic)
-
-    from dask_traj_spark.operators.distance import (
-        _atom_role_restrict,
-        _with_box,
-    )
-    from dask_traj_spark.operators.mic import BOX_COLS, add_mic_displacement
-
-    use_box = periodic and traj.have_unitcell
-    spark = traj.spark
-    trip = F.broadcast(
-        _pairs_df(spark, arr, ["triplet_id", "i", "j", "k"])
-    )
-
-    def role(ids, suffix, frame_col):
-        # unique column names per role: the three sides share one
-        # coords lineage (triple self-join) and Spark re-aliases
-        # duplicate attribute ids, so name-based joins are the only
-        # unambiguous form
-        return _atom_role_restrict(traj.coords, ids).select(
-            F.col("frame_id").alias(frame_col),
-            F.col("atom_id").alias(f"_a{suffix}"),
-            F.col("x").cast("double").alias(f"x{suffix}"),
-            F.col("y").cast("double").alias(f"y{suffix}"),
-            F.col("z").cast("double").alias(f"z{suffix}"),
+    if form == "vectorized" and not _round6_double:
+        # (the rounding knob only exists on the SQL path)
+        return _vectorized_op(
+            traj, arr, periodic, kernels.angles_np,
+            "triplet_id", ("angle_rad",), schemas.ANGLES_SCHEMA,
         )
-
-    cj = role(arr[:, 1], "j", "frame_id")
-    ci = role(arr[:, 0], "i", "_fi")
-    ck = role(arr[:, 2], "k", "_fk")
-    df = (
-        cj.join(trip, F.col("_aj") == F.col("j"))
-        .join(ci, (F.col("_ai") == F.col("i")) & (F.col("_fi") == F.col("frame_id")))
-        .join(ck, (F.col("_ak") == F.col("k")) & (F.col("_fk") == F.col("frame_id")))
-        .select(
-            "frame_id", "triplet_id",
-            "xi", "yi", "zi", "xj", "yj", "zj", "xk", "yk", "zk",
-        )
+    df = _add_legs(
+        traj,
+        _role_coords_sql(traj, arr, "triplet_id"),
+        {"u": ("j", "i"), "v": ("j", "k")},
+        periodic and traj.have_unitcell,
     )
-    df = df.withColumns(
-        {
-            "ux": F.col("xi") - F.col("xj"),
-            "uy": F.col("yi") - F.col("yj"),
-            "uz": F.col("zi") - F.col("zj"),
-            "vx": F.col("xk") - F.col("xj"),
-            "vy": F.col("yk") - F.col("yj"),
-            "vz": F.col("zk") - F.col("zj"),
-        }
-    )
-    if use_box:
-        df = _with_box(traj, df)
-        df = add_mic_displacement(df, "ux", "uy", "uz", out=("mux", "muy", "muz"))
-        df = add_mic_displacement(df, "vx", "vy", "vz", out=("mvx", "mvy", "mvz"))
-        df = (
-            df.drop("_ortho", *BOX_COLS)
-            .drop("ux", "uy", "uz", "vx", "vy", "vz")
-            .withColumnsRenamed(
-                {"mux": "ux", "muy": "uy", "muz": "uz",
-                 "mvx": "vx", "mvy": "vy", "mvz": "vz"}
-            )
-        )
     # x*x, not pow(x,2): multiplication is IEEE exact-rounded, pow is
     # not guaranteed — matters for bit-reproducibility vs the oracle
     sq = lambda c: F.col(c) * F.col(c)  # noqa: E731
@@ -135,33 +84,6 @@ def compute_angles(
         else F.acos(cosang).cast("float")
     )
     return df.select("frame_id", "triplet_id", ang.alias("angle_rad"))
-
-
-def _vectorized_angles(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    import pandas as pd
-
-    sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    sc = traj.spark.sparkContext
-    b = sc.broadcast(np.searchsorted(sel, arr).astype(np.int32))
-    b_lookup = sc.broadcast(lookup)
-    n_trip = len(arr)
-
-    def gen(batches):
-        t = b.value
-        ti, tj, tk = t[:, 0], t[:, 1], t[:, 2]
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            ang = kernels.angles_np(xyz, ti, tj, tk, box, ortho)
-            yield pd.DataFrame(
-                {
-                    "frame_id": np.repeat(fids, n_trip),
-                    "triplet_id": np.tile(np.arange(n_trip, dtype=np.int32), len(fids)),
-                    "angle_rad": ang.ravel(),
-                }
-            )
-
-    return packed.mapInPandas(gen, schema=schemas.ANGLES_SCHEMA)
 
 
 def compute_dihedrals(
@@ -188,71 +110,20 @@ def compute_dihedrals(
     transcendental).  Vectorized form: numpy kernel over packed
     frame blocks, shuffle-free."""
     arr = _normalize_indices(quartets, 4, n_atoms or traj.n_atoms, "quartets")
+    form = _resolve_form(form, len(arr))
     if len(arr) == 0:
-        return traj.spark.createDataFrame(
-            [], "frame_id long, quartet_id int, dihedral_rad float"
-        )
-    if form == "auto":
-        form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
+        return traj.spark.createDataFrame([], _DIHEDRALS_SCHEMA)
     if form == "vectorized":
-        return _vectorized_dihedrals(traj, arr, periodic)
-
-    from dask_traj_spark.operators.distance import _atom_role_restrict, _with_box
-    from dask_traj_spark.operators.mic import BOX_COLS, add_mic_displacement
-
-    use_box = periodic and traj.have_unitcell
-    spark = traj.spark
-    quart = F.broadcast(_pairs_df(spark, arr, ["quartet_id", "i", "j", "k", "l"]))
-
-    def role(ids, suffix, frame_col):
-        return _atom_role_restrict(traj.coords, ids).select(
-            F.col("frame_id").alias(frame_col),
-            F.col("atom_id").alias(f"_a{suffix}"),
-            F.col("x").cast("double").alias(f"x{suffix}"),
-            F.col("y").cast("double").alias(f"y{suffix}"),
-            F.col("z").cast("double").alias(f"z{suffix}"),
+        return _vectorized_op(
+            traj, arr, periodic, kernels.dihedrals_np,
+            "quartet_id", ("dihedral_rad",), _DIHEDRALS_SCHEMA,
         )
-
-    cj = role(arr[:, 1], "j", "frame_id")
-    ci = role(arr[:, 0], "i", "_fi")
-    ck = role(arr[:, 2], "k", "_fk")
-    cl = role(arr[:, 3], "l", "_fl")
-    df = (
-        cj.join(quart, F.col("_aj") == F.col("j"))
-        .join(ci, (F.col("_ai") == F.col("i")) & (F.col("_fi") == F.col("frame_id")))
-        .join(ck, (F.col("_ak") == F.col("k")) & (F.col("_fk") == F.col("frame_id")))
-        .join(cl, (F.col("_al") == F.col("l")) & (F.col("_fl") == F.col("frame_id")))
-        .select(
-            "frame_id", "quartet_id",
-            "xi", "yi", "zi", "xj", "yj", "zj",
-            "xk", "yk", "zk", "xl", "yl", "zl",
-        )
+    df = _add_legs(
+        traj,
+        _role_coords_sql(traj, arr, "quartet_id"),
+        {"b1": ("i", "j"), "b2": ("j", "k"), "b3": ("k", "l")},
+        periodic and traj.have_unitcell,
     )
-    df = df.withColumns(
-        {
-            "b1x": F.col("xj") - F.col("xi"),
-            "b1y": F.col("yj") - F.col("yi"),
-            "b1z": F.col("zj") - F.col("zi"),
-            "b2x": F.col("xk") - F.col("xj"),
-            "b2y": F.col("yk") - F.col("yj"),
-            "b2z": F.col("zk") - F.col("zj"),
-            "b3x": F.col("xl") - F.col("xk"),
-            "b3y": F.col("yl") - F.col("yk"),
-            "b3z": F.col("zl") - F.col("zk"),
-        }
-    )
-    if use_box:
-        df = _with_box(traj, df)
-        for pre in ("b1", "b2", "b3"):
-            df = add_mic_displacement(
-                df, f"{pre}x", f"{pre}y", f"{pre}z",
-                out=(f"m{pre}x", f"m{pre}y", f"m{pre}z"),
-            )
-        df = df.drop("_ortho", *BOX_COLS)
-        df = df.drop(*[f"{p}{c}" for p in ("b1", "b2", "b3") for c in "xyz"])
-        df = df.withColumnsRenamed(
-            {f"m{p}{c}": f"{p}{c}" for p in ("b1", "b2", "b3") for c in "xyz"}
-        )
     # cross products as explicit exact-rounded column expressions
     df = df.withColumns(
         {
@@ -296,35 +167,6 @@ def compute_dihedrals(
     )
 
 
-def _vectorized_dihedrals(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
-    import pandas as pd
-
-    sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    sc = traj.spark.sparkContext
-    b = sc.broadcast(np.searchsorted(sel, arr).astype(np.int32))
-    b_lookup = sc.broadcast(lookup)
-
-    def gen(batches):
-        q = b.value
-        qi, qj, qk, ql = q[:, 0], q[:, 1], q[:, 2], q[:, 3]
-        for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            d = kernels.dihedrals_np(xyz, qi, qj, qk, ql, box, ortho)
-            n_q = d.shape[1]
-            yield pd.DataFrame(
-                {
-                    "frame_id": np.repeat(fids, n_q),
-                    "quartet_id": np.tile(np.arange(n_q, dtype=np.int32), len(fids)),
-                    "dihedral_rad": d.reshape(-1),
-                }
-            )
-
-    return packed.mapInPandas(
-        gen, "frame_id long, quartet_id int, dihedral_rad float"
-    )
-
-
 def hydrogen_bonds(
     traj,
     triplets: Iterable,
@@ -354,8 +196,6 @@ def hydrogen_bonds(
     (0.5, 1.75 are exact in f32/f64) so the flag comparison cannot
     straddle an engine rounding difference.
     """
-    from dask_traj_spark.operators.distance import compute_distances
-
     arr = _normalize_indices(
         triplets, 3, n_atoms or traj.n_atoms, "triplets"
     )

@@ -1,19 +1,25 @@
 """Distances, displacements, closest contact, centers (G1/G2/G5/G6/G7).
 
-Each operator has two equivalent physical strategies (SURVEY.md §7.1):
+Every index-set geometry operator (here and in ``angle.py``) has two
+equivalent physical strategies (SURVEY.md §7.1), built from one
+shared core:
 
-- ``form="sql"`` — a declarative plan: broadcast the (tiny) pair
-  table, semi-filter the coords fact table to the atoms referenced,
-  self-join per frame, compute the displacement with codegen'd
-  column expressions (MIC included — see ``mic.py``). Catalyst gets
-  full pushdown/pruning visibility; used as the auditable
-  cross-check and for small pair sets.
-- ``form="vectorized"`` — the throughput path: pivot to wide
-  per-frame rows (ONE shuffle), then ``mapInPandas`` runs the numpy
-  kernels in ``kernels.py`` over Arrow batches; zero further
-  shuffles; output is already long-format.
+- ``form="sql"`` — a declarative plan: :func:`_role_coords_sql`
+  broadcasts the (tiny) index table onto one role's coords rows and
+  joins every other role on (frame_id, atom), each role restricted
+  to the atoms it references; :func:`_add_legs` computes the
+  displacement legs with codegen'd column expressions (MIC included
+  — see ``mic.py``). Catalyst gets full pushdown/pruning
+  visibility; used as the auditable cross-check and for small
+  index sets.
+- ``form="vectorized"`` — the throughput path: :func:`_vectorized_op`
+  feeds ``traj.frame_packed()`` (frame-contiguous rows; one range
+  shuffle unless the trajectory is already packed) to
+  ``mapInPandas``, which runs a numpy kernel from ``kernels.py``
+  over complete-frame Arrow blocks; zero further shuffles; output is
+  already long-format.
 
-``form="auto"`` picks vectorized for ≥512 pairs.
+``form="auto"`` picks vectorized for ≥512 index rows.
 
 The reference's equivalents: driver loops over frame-chunks wrapping
 delayed numpy/C kernels (``geometry/distance.py:69-145`` distances,
@@ -24,7 +30,7 @@ all frames with a ``min_by`` aggregation, strictly more capable).
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Iterable
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
@@ -32,12 +38,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 from dask_traj_spark import schemas
 from dask_traj_spark.operators import kernels
 from dask_traj_spark.operators.mic import (
+    BOX_COLS,
     add_mic_displacement,
     add_mic_distance,
     orthogonality_expr,
 )
 
-_BOX_COLS = ["ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz"]
 _VECTORIZED_THRESHOLD = 512
 
 
@@ -63,10 +69,17 @@ def _normalize_indices(
     return arr.astype(np.int32)
 
 
-def _pairs_df(spark, arr: np.ndarray, cols: Sequence[str]) -> DataFrame:
-    rows = [(int(i),) + tuple(int(v) for v in r) for i, r in enumerate(arr)]
-    schema = ", ".join([f"{cols[0]} int"] + [f"{c} int" for c in cols[1:]])
-    return spark.createDataFrame(rows, schema)
+def _resolve_form(form: str, n: int) -> str:
+    """The physical form for an ``n``-row index set: ``"auto"`` picks
+    vectorized from ``_VECTORIZED_THRESHOLD`` rows up; anything but
+    auto/sql/vectorized is rejected."""
+    if form == "auto":
+        return "vectorized" if n >= _VECTORIZED_THRESHOLD else "sql"
+    if form not in ("sql", "vectorized"):
+        raise ValueError(
+            f"form must be 'auto', 'sql' or 'vectorized', got {form!r}"
+        )
+    return form
 
 
 def _with_box(traj, df: DataFrame) -> DataFrame:
@@ -77,7 +90,7 @@ def _with_box(traj, df: DataFrame) -> DataFrame:
     uc = traj.unitcell_full()
     sel = uc.select(
         "frame_id",
-        *[F.col(c).cast("double").alias(c) for c in _BOX_COLS],
+        *[F.col(c).cast("double").alias(c) for c in BOX_COLS],
         orthogonality_expr(
             F.col("alpha").cast("double"),
             F.col("beta").cast("double"),
@@ -87,23 +100,27 @@ def _with_box(traj, df: DataFrame) -> DataFrame:
     return df.join(sel, "frame_id")
 
 
-def _add_displacement(traj, df: DataFrame, use_box: bool) -> DataFrame:
-    """Append MIC-aware displacement columns (_dx,_dy,_dz) to a df
-    with x1..z2 (and join the box when periodic)."""
-    df = df.withColumns(
-        {
-            "_dx": F.col("x2") - F.col("x1"),
-            "_dy": F.col("y2") - F.col("y1"),
-            "_dz": F.col("z2") - F.col("z1"),
-        }
-    )
+def _add_legs(traj, df: DataFrame, legs: dict, use_box: bool) -> DataFrame:
+    """Append each leg's displacement r_b − r_a as columns
+    ``<leg>x, <leg>y, <leg>z`` — ``legs`` maps leg name → (a, b), role
+    coordinates named as :func:`_role_coords_sql` names them — MIC
+    wrapped when ``use_box``, every leg through ONE box join."""
+    cols = {
+        f"{leg}{c}": F.col(f"{c}{b}") - F.col(f"{c}{a}")
+        for leg, (a, b) in legs.items()
+        for c in "xyz"
+    }
+    df = df.withColumns(cols)
     if not use_box:
         return df
     df = _with_box(traj, df)
-    df = add_mic_displacement(df, "_dx", "_dy", "_dz", out=("_mx", "_my", "_mz"))
-    return (
-        df.drop("_dx", "_dy", "_dz", "_ortho", *_BOX_COLS)
-        .withColumnsRenamed({"_mx": "_dx", "_my": "_dy", "_mz": "_dz"})
+    for leg in legs:
+        df = add_mic_displacement(
+            df, f"{leg}x", f"{leg}y", f"{leg}z",
+            out=(f"_m{leg}x", f"_m{leg}y", f"_m{leg}z"),
+        )
+    return df.drop("_ortho", *BOX_COLS, *cols).withColumnsRenamed(
+        {f"_m{c}": c for c in cols}
     )
 
 
@@ -120,12 +137,16 @@ def _add_displacement(traj, df: DataFrame, use_box: bool) -> DataFrame:
 _LITERAL_ATOM_FILTER_MAX = 4096
 
 
-def _atom_selection(c: DataFrame, ids) -> DataFrame:
-    ids = sorted({int(i) for i in ids})
-    pred = F.col("atom_id").between(ids[0], ids[-1])
-    if len(ids) < ids[-1] - ids[0] + 1:  # non-contiguous
-        pred = pred & F.col("atom_id").isin(ids)
-    return c.where(pred)
+def _atom_predicate(uniq: np.ndarray) -> Column:
+    """``atom_id`` in the sorted unique ids, as a literal filter: a
+    BETWEEN range (prunes parquet row groups and in-memory cache
+    batches via min/max stats), narrowed by an IN list only when the
+    ids are not contiguous."""
+    lo, hi = int(uniq[0]), int(uniq[-1])
+    pred = F.col("atom_id").between(lo, hi)
+    if len(uniq) < hi - lo + 1:
+        pred = pred & F.col("atom_id").isin([int(i) for i in uniq])
+    return pred
 
 
 def _atom_role_restrict(c: DataFrame, ids) -> DataFrame:
@@ -134,7 +155,7 @@ def _atom_role_restrict(c: DataFrame, ids) -> DataFrame:
     semi-join beyond."""
     uniq = np.unique(np.asarray(list(ids), dtype=np.int64))
     if len(uniq) <= _LITERAL_ATOM_FILTER_MAX:
-        return _atom_selection(c, uniq)
+        return c.where(_atom_predicate(uniq))
     sel = F.broadcast(
         c.sparkSession.createDataFrame(
             [(int(i),) for i in uniq], "atom_id int"
@@ -143,72 +164,57 @@ def _atom_role_restrict(c: DataFrame, ids) -> DataFrame:
     return c.join(sel, "atom_id", "left_semi")
 
 
-def _pair_coords_sql(
-    traj,
-    pairs_df: DataFrame,
-    a_col: str,
-    b_col: str,
-    id_col: str,
-    ids_a=None,
-    ids_b=None,
-) -> DataFrame:
-    """(frame_id, <id_col>, x1..z1, x2..z2) for every (frame, pair).
+def _role_coords_sql(traj, arr: np.ndarray, id_col: str) -> DataFrame:
+    """(frame_id, <id_col>, x<r>, y<r>, z<r> per role r) for every
+    (frame, row) of a validated (n, 2|3|4) index set whose columns
+    are the roles i, j, k, l; ``id_col`` is the row position.
 
-    Plan shape: coords ⋈ broadcast(pairs twice). The two joins key on
-    atom_id (broadcast hash, no shuffle of the fact table), then the
-    1↔2 sides meet on (frame_id, pair) — both sides restricted to
-    referenced atoms first (literal scan filter when the selection is
-    small — see ``_LITERAL_ATOM_FILTER_MAX`` — else broadcast
-    semi-join) so the shuffle moves only the atoms the query touches,
-    not the full fact table.
-    """
-    p = F.broadcast(pairs_df)
-    c = traj.coords
+    Plan shape: the index table is broadcast onto role j's coords
+    rows (an atom-keyed hash join, no shuffle of the fact table);
+    every other role then joins on (frame_id, atom).  Each role is
+    restricted to the atoms it references first
+    (:func:`_atom_role_restrict`), so the shuffles move only the
+    atoms the query touches and the coords lineage is scanned once
+    per role."""
+    roles = "ijkl"[: arr.shape[1]]
+    idx = traj.spark.createDataFrame(
+        [(i, *(int(a) for a in row)) for i, row in enumerate(arr)],
+        ", ".join(f"{c} int" for c in (id_col, *roles)),
+    )
 
-    def restrict(col_name, ids):
-        if ids is not None and len(set(map(int, ids))) <= _LITERAL_ATOM_FILTER_MAX:
-            return _atom_selection(c, ids)
-        sel = F.broadcast(pairs_df.select(F.col(col_name).alias("atom_id")).distinct())
-        return c.join(sel, "atom_id", "left_semi")
-
-    c1 = (
-        restrict(a_col, ids_a)
-        .join(p, F.col("atom_id") == F.col(a_col))
-        .select(
-            "frame_id",
-            F.col(id_col),
-            F.col(b_col).alias("_other"),
-            F.col("x").cast("double").alias("x1"),
-            F.col("y").cast("double").alias("y1"),
-            F.col("z").cast("double").alias("z1"),
+    def role(r, frame_col):
+        # unique column names per role: the roles share one coords
+        # lineage (self-join) and Spark re-aliases duplicate
+        # attribute ids, so name-based joins are the only unambiguous
+        # form
+        return _atom_role_restrict(traj.coords, arr[:, roles.index(r)]).select(
+            F.col("frame_id").alias(frame_col),
+            F.col("atom_id").alias(f"_a{r}"),
+            *[F.col(c).cast("double").alias(f"{c}{r}") for c in "xyz"],
         )
+
+    df = role("j", "frame_id").join(F.broadcast(idx), F.col("_aj") == F.col("j"))
+    for r in roles.replace("j", ""):
+        df = df.join(
+            role(r, f"_f{r}"),
+            (F.col(f"_a{r}") == F.col(r)) & (F.col(f"_f{r}") == F.col("frame_id")),
+        )
+    return df.select(
+        "frame_id", id_col, *[f"{c}{r}" for r in roles for c in "xyz"]
     )
-    c2 = restrict(b_col, ids_b).select(
-        "frame_id",
-        F.col("atom_id").alias("_other"),
-        F.col("x").cast("double").alias("x2"),
-        F.col("y").cast("double").alias("y2"),
-        F.col("z").cast("double").alias("z2"),
-    )
-    return c1.join(c2, ["frame_id", "_other"]).drop("_other")
 
 
-def _displacements_sql(
-    traj, pairs_df: DataFrame, periodic: bool, arr=None
-) -> DataFrame:
-    use_box = periodic and traj.have_unitcell
-    ids_a = arr[:, 0] if arr is not None else None
-    ids_b = arr[:, 1] if arr is not None else None
-    df = _pair_coords_sql(
-        traj, pairs_df, "i", "j", "pair_id", ids_a=ids_a, ids_b=ids_b
+def _displacements_sql(traj, arr: np.ndarray, periodic: bool) -> DataFrame:
+    df = _add_legs(
+        traj,
+        _role_coords_sql(traj, arr, "pair_id"),
+        {"d": ("i", "j")},
+        periodic and traj.have_unitcell,
     )
-    df = _add_displacement(traj, df, use_box)
     return df.select(
         "frame_id",
         "pair_id",
-        F.col("_dx").cast("float").alias("dx"),
-        F.col("_dy").cast("float").alias("dy"),
-        F.col("_dz").cast("float").alias("dz"),
+        *[F.col(c).cast("float").alias(c) for c in ("dx", "dy", "dz")],
     )
 
 
@@ -221,59 +227,16 @@ def _displacements_sql(
 # slower end-to-end — per-element boxing on the JVM side). The numpy
 # reshape to (frames, atoms, 3) happens Python-side, where it's a
 # single memcpy-shaped operation. The per-frame unitcell is tiny and
-# rides along as a broadcast numpy lookup, not as joined columns on
-# 10^8 rows.
-
-
-#: frame count above which the vectorized feed JOINS box columns
-#: onto the packed coords (broadcast hash join — preserves the
-#: frame-contiguous partition layout the kernels require) instead of
-#: collecting a per-frame lookup to the driver.  10^7 frames ≈
-#: 600 MB of unitcell rows: fine to broadcast, NOT fine to
-#: `toPandas()` through the driver on every operator call.
-BOX_JOIN_FRAMES = 10_000_000
-
-
-def _frame_count_hint(traj) -> int:
-    """Frame count for dispatch decisions, as cheaply as possible.
-
-    Order: the Trajectory's already-cached ``n_frames`` (free) → the
-    per-frame dimension table's count (tiny, and exact — seeds the
-    cache) → the (max-min+1) frame-id span over coords.  The span is
-    a partial min/max aggregate — no shuffle, one scan, vs the exact
-    distinct-count's hash-aggregate exchange — and is an UPPER bound
-    when frame ids are sparse, which only biases dispatch toward the
-    branch that scales (blocked gram / box-column join): the safe
-    side to err on at scale."""
-    nf = traj.__dict__.get("n_frames")
-    if nf is not None:
-        return nf
-    if traj._frames is not None:
-        nf = traj._frames.count()
-        traj.__dict__["n_frames"] = nf  # exact: one row per frame
-        return nf
-    # the span is cached under its OWN key (never as n_frames — it is
-    # an upper bound, not the exact count): without the cache every
-    # periodic geometry call on a frames-less Trajectory would re-scan
-    # the whole coords table for this one dispatch decision
-    hint = traj.__dict__.get("_nf_span_hint")
-    if hint is not None:
-        return hint
-    row = traj.coords.agg(
-        F.min("frame_id").alias("lo"), F.max("frame_id").alias("hi")
-    ).first()
-    hint = 0 if row["hi"] is None else int(row["hi"]) - int(row["lo"]) + 1
-    traj.__dict__["_nf_span_hint"] = hint
-    return hint
+# rides along as a broadcast numpy lookup, never as a join above the
+# packed feed: Catalyst drops the feed's sortWithinPartitions once a
+# join sits above it, and the kernels need frame-sorted rows.
 
 
 class _BoxLookup:
     """Driver-collected per-frame box: frame_id → (3,3) vectors +
-    orthogonality flag, queried with searchsorted inside kernels.
-
-    Scale note: one row per frame (n_frames ≪ n_rows), used below
-    ``BOX_JOIN_FRAMES``; past that, :func:`_packed_input`
-    automatically joins the box columns onto the feed instead."""
+    orthogonality flag, broadcast to the kernels and queried with
+    searchsorted per frame block.  One row per frame (n_frames ≪
+    n_rows), collected once per operator call."""
 
     def __init__(self, ids, vecs, ortho):
         self.ids = ids
@@ -284,12 +247,12 @@ class _BoxLookup:
     def from_traj(cls, traj):
         pdf = (
             traj.unitcell_full()
-            .select("frame_id", *_BOX_COLS, "alpha", "beta", "gamma")
+            .select("frame_id", *BOX_COLS, "alpha", "beta", "gamma")
             .toPandas()
             .sort_values("frame_id")
         )
         ids = pdf["frame_id"].to_numpy()
-        vecs = pdf[_BOX_COLS].to_numpy(dtype=np.float32).reshape(-1, 3, 3)
+        vecs = pdf[BOX_COLS].to_numpy(dtype=np.float32).reshape(-1, 3, 3)
         ang = pdf[["alpha", "beta", "gamma"]].to_numpy(dtype=np.float32)
         return cls(ids, vecs, kernels.is_orthogonal_np(ang))
 
@@ -321,15 +284,9 @@ def _iter_frame_blocks(batches):
         yield carry
 
 
-def _block_arrays(block, box_lookup):
-    """Complete-frame block → (frame_ids (B,), xyz (B, n_atoms, 3),
-    box (B,3,3)|None, ortho (B,)|None).  The box comes from the
-    driver-collected ``box_lookup`` when given, else from joined box
-    COLUMNS riding on the block (the >``BOX_JOIN_FRAMES`` path —
-    rows within a frame share their box, so the first row per frame
-    is read), else no box (non-periodic)."""
-    fids_all = block["frame_id"].to_numpy()
-    fids, counts = np.unique(fids_all, return_counts=True)
+def _block_arrays(block):
+    """Complete-frame block → (frame_ids (B,), xyz (B, n_atoms, 3))."""
+    fids, counts = np.unique(block["frame_id"].to_numpy(), return_counts=True)
     n_at = int(counts[0])
     if not (counts == n_at).all():
         raise ValueError(
@@ -338,143 +295,67 @@ def _block_arrays(block, box_lookup):
             f"frames per partition); counts={dict(zip(fids, counts))}"
         )
     xyz = np.stack(
-        [
-            block["x"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-            block["y"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-            block["z"].to_numpy(dtype=np.float32).reshape(-1, n_at),
-        ],
+        [block[c].to_numpy(dtype=np.float32).reshape(-1, n_at) for c in "xyz"],
         axis=-1,
     )
-    if box_lookup is not None:
-        box, ortho = box_lookup.get(fids)
-        return fids, xyz, box, ortho
-    if "ax" in block.columns:
-        # box-column path: first row index of each (sorted) frame
-        first = np.searchsorted(fids_all, fids)
-        box = np.stack(
-            [block[c].to_numpy(dtype=np.float32)[first] for c in _BOX_COLS],
-            axis=-1,
-        ).reshape(-1, 3, 3)
-        ang = np.stack(
-            [
-                block[c].to_numpy(dtype=np.float32)[first]
-                for c in ("alpha", "beta", "gamma")
-            ],
-            axis=-1,
-        )
-        return fids, xyz, box, kernels.is_orthogonal_np(ang)
-    return fids, xyz, None, None
+    return fids, xyz
 
 
-def _packed_input(
-    traj,
-    periodic: bool,
-    atoms: np.ndarray | None = None,
-):
-    """The vectorized feed: frame-packed coords, optionally
-    semi-filtered to the atoms the index set actually references
-    (pushdown-friendly JVM-side predicate — with 500 of 22k atoms
+def _packed_input(traj, atoms: np.ndarray | None = None) -> DataFrame:
+    """The vectorized feed: frame-packed coords, optionally filtered
+    to the atoms an index set references (a literal JVM-side
+    predicate, see :func:`_atom_predicate` — with 500 of 22k atoms
     selected this cuts the Arrow feed ~45×), projected to the 4
-    columns the kernel reads.
-
-    Returns (feed_df, box_lookup).  The box rides as a driver-
-    collected per-frame lookup below ``BOX_JOIN_FRAMES`` frames;
-    past that the lookup's `toPandas()` would materialize n_frames
-    rows through the driver on every call, so the unitcell columns
-    are instead BROADCAST-joined onto the feed (a map-side hash
-    join — the frame-contiguous partition layout the kernels
-    require survives; a shuffle join would not preserve it, which
-    is why the join is pinned broadcast) and ``box_lookup`` comes
-    back None with :func:`_block_arrays` reading the columns.
+    columns the kernels read.
 
     When ``atoms`` is given the caller must remap its indices to
     positions in the sorted unique atom list (np.searchsorted) —
     frames in the feed then contain exactly those atoms in sorted
     order.
     """
-    use_box = periodic and traj.have_unitcell
-    box_join = use_box and _frame_count_hint(traj) > BOX_JOIN_FRAMES
-    lookup = _BoxLookup.from_traj(traj) if use_box and not box_join else None
     feed = traj.frame_packed()
     if atoms is not None:
-        lo, hi = int(atoms[0]), int(atoms[-1])
-        # np.array_equal against the full arange, not just a span-size
-        # check: an unsorted or duplicated input whose span happens to
-        # equal its length (e.g. [1, 2, 2, 4]) must NOT take the
-        # BETWEEN path — it would feed extra atoms into the packed
-        # frames and positional reshaping downstream would
-        # misattribute them (ADVICE r4).
-        if np.array_equal(atoms, np.arange(lo, hi + 1)):
-            # contiguous selection → a BETWEEN range predicate instead
-            # of an N-element IN list: ranges prune parquet row groups
-            # AND in-memory-cache batches via min/max stats (an IN list
-            # is evaluated row-at-a-time on every cached batch), and
-            # the common selections (leading protein atoms, residue
-            # blocks) are contiguous
-            feed = feed.filter(F.col("atom_id").between(lo, hi))
-        else:
-            feed = feed.filter(F.col("atom_id").isin([int(a) for a in atoms]))
-    if box_join:
-        uc = traj.unitcell_full().select(
-            "frame_id",
-            *[F.col(c).cast("float").alias(c) for c in _BOX_COLS],
-            *[
-                F.col(c).cast("float").alias(c)
-                for c in ("alpha", "beta", "gamma")
-            ],
-        )
-        feed = feed.join(F.broadcast(uc), "frame_id").select(
-            "frame_id", "x", "y", "z", *_BOX_COLS, "alpha", "beta", "gamma"
-        )
-        return feed, None
-    return feed.select("frame_id", "x", "y", "z"), lookup
+        feed = feed.where(_atom_predicate(np.unique(atoms)))
+    return feed.select("frame_id", "x", "y", "z")
 
 
-def _vectorized_pair_op(
-    traj, arr: np.ndarray, periodic: bool, want_vectors: bool, wide_output: bool = False
+def _vectorized_op(
+    traj,
+    arr: np.ndarray,
+    periodic: bool,
+    kernel,
+    id_col: str,
+    value_cols: tuple,
+    schema,
 ) -> DataFrame:
+    """Run ``kernel(xyz, *index_columns, box, ortho)`` — any kernel in
+    ``kernels.py`` — over the packed feed of the atoms ``arr``
+    references → (frame_id, <id_col>, *value_cols), one row per
+    (frame, index row), ``id_col`` the row position in ``arr``."""
     import pandas as pd
 
     sel = np.unique(arr)
-    packed, lookup = _packed_input(traj, periodic, atoms=sel)
-    remapped = np.searchsorted(sel, arr).astype(np.int32)
+    packed = _packed_input(traj, atoms=sel)
+    use_box = periodic and traj.have_unitcell
     sc = traj.spark.sparkContext
-    b_pairs = sc.broadcast(remapped)
-    b_lookup = sc.broadcast(lookup)
-    n_pairs = len(arr)
+    # one contiguous row per index column, remapped to feed positions
+    b_idx = sc.broadcast(
+        np.ascontiguousarray(np.searchsorted(sel, arr).T, dtype=np.int32)
+    )
+    b_lookup = sc.broadcast(_BoxLookup.from_traj(traj) if use_box else None)
+    n = len(arr)
 
     def gen(batches):
-        pi = b_pairs.value[:, 0]
-        pj = b_pairs.value[:, 1]
+        idx, lookup = b_idx.value, b_lookup.value
+        rows = np.arange(n, dtype=np.int32)
         for block in _iter_frame_blocks(batches):
-            fids, xyz, box, ortho = _block_arrays(block, b_lookup.value)
-            if wide_output and not want_vectors:
-                d = kernels.distances_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame({"frame_id": fids, "dists": list(d)})
-                continue
-            frames = np.repeat(fids, n_pairs)
-            pids = np.tile(np.arange(n_pairs, dtype=np.int32), len(fids))
-            if want_vectors:
-                d = kernels.displacements_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame(
-                    {
-                        "frame_id": frames,
-                        "pair_id": pids,
-                        "dx": d[..., 0].ravel(),
-                        "dy": d[..., 1].ravel(),
-                        "dz": d[..., 2].ravel(),
-                    }
-                )
-            else:
-                d = kernels.distances_np(xyz, pi, pj, box, ortho)
-                yield pd.DataFrame(
-                    {"frame_id": frames, "pair_id": pids, "dist": d.ravel()}
-                )
+            fids, xyz = _block_arrays(block)
+            box, ortho = lookup.get(fids) if lookup is not None else (None, None)
+            vals = kernel(xyz, *idx, box, ortho).reshape(-1, len(value_cols))
+            out = {"frame_id": np.repeat(fids, n), id_col: np.tile(rows, len(fids))}
+            out.update(zip(value_cols, vals.T))
+            yield pd.DataFrame(out)
 
-    if wide_output and not want_vectors:
-        schema = schemas.DISTANCES_WIDE_SCHEMA
-    else:
-        schema = schemas.DISPLACEMENTS_SCHEMA if want_vectors else schemas.DISTANCES_SCHEMA
     return packed.mapInPandas(gen, schema=schema)
 
 
@@ -487,44 +368,34 @@ def compute_distances(
     periodic: bool = True,
     form: str = "auto",
     n_atoms: int | None = None,
-    wide_output: bool = False,
 ) -> DataFrame:
     """Euclidean distance per (frame, atom-pair), optional MIC.
 
     Returns DataFrame(frame_id, pair_id, dist FLOAT); pair_id is the
-    position in ``atom_pairs``. With ``wide_output=True`` (vectorized
-    form only) returns (frame_id, dists ARRAY<FLOAT>) — one row per
-    frame, the reference's native result shape. Reference:
-    compute_distances, geometry/distance.py:69-145.
+    position in ``atom_pairs``. Reference: compute_distances,
+    geometry/distance.py:69-145.
     """
     arr = _normalize_indices(atom_pairs, 2, n_atoms or traj.n_atoms, "atom_pairs")
+    form = _resolve_form(form, len(arr))
     if len(arr) == 0:  # P4 empty short-circuit (distance.py:107-108)
         return traj.spark.createDataFrame([], schemas.DISTANCES_SCHEMA)
-    if form == "auto":
-        form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
     if form == "vectorized":
-        return _vectorized_pair_op(
-            traj, arr, periodic, want_vectors=False, wide_output=wide_output
+        return _vectorized_op(
+            traj, arr, periodic, kernels.distances_np,
+            "pair_id", ("dist",), schemas.DISTANCES_SCHEMA,
         )
-    pairs_df = _pairs_df(traj.spark, arr, ["pair_id", "i", "j"])
     if periodic and traj.have_unitcell:
         # distance-only MIC fast path: min(d2) via codegen'd least()
         # instead of the interpreted 27-image argmin HOF
-        df = _pair_coords_sql(
-            traj, pairs_df, "i", "j", "pair_id",
-            ids_a=arr[:, 0], ids_b=arr[:, 1],
-        ).withColumns(
-            {
-                "_dx": F.col("x2") - F.col("x1"),
-                "_dy": F.col("y2") - F.col("y1"),
-                "_dz": F.col("z2") - F.col("z1"),
-            }
+        df = _add_legs(
+            traj, _role_coords_sql(traj, arr, "pair_id"),
+            {"_d": ("i", "j")}, use_box=False,
         )
         df = add_mic_distance(
             _with_box(traj, df), "_dx", "_dy", "_dz", out="_dist"
         )
         return df.select("frame_id", "pair_id", F.col("_dist").alias("dist"))
-    d = _displacements_sql(traj, pairs_df, periodic, arr=arr)
+    d = _displacements_sql(traj, arr, periodic)
     # x*x, not pow(x,2) — exact-rounded, bit-reproducible vs the oracle
     sq = lambda c: F.col(c).cast("double") * F.col(c).cast("double")  # noqa: E731
     dist = F.sqrt(sq("dx") + sq("dy") + sq("dz"))
@@ -544,14 +415,15 @@ def compute_displacements(
     Reference: compute_displacements, geometry/distance.py:202-279.
     """
     arr = _normalize_indices(atom_pairs, 2, n_atoms or traj.n_atoms, "atom_pairs")
+    form = _resolve_form(form, len(arr))
     if len(arr) == 0:
         return traj.spark.createDataFrame([], schemas.DISPLACEMENTS_SCHEMA)
-    if form == "auto":
-        form = "vectorized" if len(arr) >= _VECTORIZED_THRESHOLD else "sql"
     if form == "vectorized":
-        return _vectorized_pair_op(traj, arr, periodic, want_vectors=True)
-    pairs_df = _pairs_df(traj.spark, arr, ["pair_id", "i", "j"])
-    return _displacements_sql(traj, pairs_df, periodic, arr=arr)
+        return _vectorized_op(
+            traj, arr, periodic, kernels.displacements_np,
+            "pair_id", ("dx", "dy", "dz"), schemas.DISPLACEMENTS_SCHEMA,
+        )
+    return _displacements_sql(traj, arr, periodic)
 
 
 def compute_center_of_mass(traj, topology: DataFrame | None = None) -> DataFrame:
@@ -602,30 +474,26 @@ def find_closest_contact(
     scales with n_frames, not with driver round-trips.
     Ties break deterministically on (dist, i, j).
     """
-    g1 = sorted({int(a) for a in group1})
-    g2 = sorted({int(a) for a in group2})
+    g1, g2 = list(group1), list(group2)
     if not g1 or not g2:
         raise ValueError("find_closest_contact requires non-empty groups")
     c = traj.coords
     if frame is not None:
         c = c.filter(F.col("frame_id") == frame)
-    c1 = c.filter(F.col("atom_id").isin(g1)).select(
-        "frame_id",
-        F.col("atom_id").alias("i"),
-        F.col("x").cast("double").alias("x1"),
-        F.col("y").cast("double").alias("y1"),
-        F.col("z").cast("double").alias("z1"),
+
+    def side(ids, r):
+        return _atom_role_restrict(c, ids).select(
+            "frame_id",
+            F.col("atom_id").alias(r),
+            *[F.col(a).cast("double").alias(f"{a}{r}") for a in "xyz"],
+        )
+
+    df = _add_legs(
+        traj,
+        side(g1, "i").join(side(g2, "j"), "frame_id"),
+        {"_d": ("i", "j")},
+        periodic and traj.have_unitcell,
     )
-    c2 = c.filter(F.col("atom_id").isin(g2)).select(
-        "frame_id",
-        F.col("atom_id").alias("j"),
-        F.col("x").cast("double").alias("x2"),
-        F.col("y").cast("double").alias("y2"),
-        F.col("z").cast("double").alias("z2"),
-    )
-    df = c1.join(c2, "frame_id")
-    use_box = periodic and traj.have_unitcell
-    df = _add_displacement(traj, df, use_box)
     dist = F.sqrt(
         F.col("_dx") * F.col("_dx")
         + F.col("_dy") * F.col("_dy")

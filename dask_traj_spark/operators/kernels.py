@@ -5,9 +5,11 @@ whose semantics the reference documents (it delegates the hot loops
 to MDTraj's C/SSE extension — ``geometry/distance.py:53-63``,
 ``geometry/angle.py:48-52``; the pure-array slow paths at
 ``distance.py:209-236`` and ``angle.py:142-176`` define the
-semantics we reproduce). They run inside ``mapInPandas`` over wide
-per-frame rows, so each invocation sees a batch of frames and is
-fully vectorized over (frames × pairs).
+semantics we reproduce). Every kernel has the signature
+``(xyz, *index_columns, box, orthogonal)`` and runs inside the one
+``mapInPandas`` driver (``distance._vectorized_op``) over
+complete-frame blocks, so each invocation sees a batch of frames and
+is fully vectorized over (frames × index rows).
 
 All inputs float32; intermediate MIC math in float32 (matching the
 reference's float32 envelope); means accumulate in float64 (as the

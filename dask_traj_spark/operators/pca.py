@@ -44,7 +44,7 @@ def pca_fit(traj, atoms, k: int = 3):
     sel = np.unique(np.asarray(list(atoms), dtype=np.int64))
     m = len(sel)
     dim = 3 * m
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
+    packed = _packed_input(traj, atoms=sel)
 
     schema = "n long, s array<double>, g array<double>"
 
@@ -52,7 +52,7 @@ def pca_fit(traj, atoms, k: int = 3):
         import pandas as pd
 
         for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
+            fids, xyz = _block_arrays(block)
             x = xyz.reshape(len(fids), dim).astype(np.float64)
             g = x.T @ x
             yield pd.DataFrame(
@@ -93,7 +93,7 @@ def pca_project(traj, atoms, mean, components) -> DataFrame:
     broadcast, zero shuffle."""
     sel = np.unique(np.asarray(list(atoms), dtype=np.int64))
     dim = 3 * len(sel)
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
+    packed = _packed_input(traj, atoms=sel)
     sc = traj.coords.sparkSession.sparkContext
     b = sc.broadcast((np.asarray(mean, dtype=np.float64),
                       np.asarray(components, dtype=np.float64)))
@@ -103,7 +103,7 @@ def pca_project(traj, atoms, mean, components) -> DataFrame:
 
         mu, comps = b.value
         for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
+            fids, xyz = _block_arrays(block)
             x = xyz.reshape(len(fids), dim).astype(np.float64) - mu
             proj = x @ comps.T  # (B, k)
             yield pd.DataFrame(
@@ -123,13 +123,13 @@ def _features_df(traj, sel) -> DataFrame:
     """(frame_id, f ARRAY<double>) — flattened selected-atom
     coordinates per frame, one map-only pass."""
     dim = 3 * len(sel)
-    packed, _ = _packed_input(traj, periodic=False, atoms=sel)
+    packed = _packed_input(traj, atoms=sel)
 
     def gen(batches):
         import pandas as pd
 
         for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
+            fids, xyz = _block_arrays(block)
             x = xyz.reshape(len(fids), dim).astype(np.float64)
             yield pd.DataFrame(
                 {"frame_id": fids, "f": [row.tolist() for row in x]}

@@ -110,12 +110,12 @@ def frame_rmsd_aligned(traj, query_frame: int) -> DataFrame:
     sc = traj.spark.sparkContext
     b_q = sc.broadcast(q)
 
-    packed, _ = _packed_input(traj, periodic=False)
+    packed = _packed_input(traj)
 
     def gen(batches):
         qc = b_q.value
         for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
+            fids, xyz = _block_arrays(block)
             out = np.empty(len(fids), dtype=np.float64)
             for i in range(len(fids)):
                 p = xyz[i].astype(np.float64)
@@ -170,7 +170,7 @@ def superpose(traj, query_frame: int) -> DataFrame:
     def gen(batches):
         qc = b_q.value
         for block in _iter_frame_blocks(batches):
-            fids, xyz, _, _ = _block_arrays(block, None)
+            fids, xyz = _block_arrays(block)
             atom_ids = block["atom_id"].to_numpy().reshape(len(fids), -1)
             frames_out = []
             for i in range(len(fids)):
@@ -451,10 +451,35 @@ def pairwise_rmsd_blocked(traj, block: int = 1024) -> DataFrame:
 PAIRWISE_RMSD_CROSSOVER = 2048
 
 
-# shared with the vectorized-feed box dispatch — one hint, one
-# caching contract (moved to distance.py in round 10; re-exported
-# here for the existing import surface)
-from dask_traj_spark.operators.distance import _frame_count_hint  # noqa: E402,F401
+def _frame_count_hint(traj) -> int:
+    """Frame count for dispatch decisions, as cheaply as possible.
+
+    Order: the Trajectory's already-cached ``n_frames`` (free) → the
+    per-frame dimension table's count (tiny, and exact — seeds the
+    cache) → the (max-min+1) frame-id span over coords.  The span is
+    a partial min/max aggregate — no shuffle, one scan, vs the exact
+    distinct-count's hash-aggregate exchange — and is an UPPER bound
+    when frame ids are sparse, which only biases dispatch toward the
+    blocked gram: the branch that scales, the safe side to err on."""
+    nf = traj.__dict__.get("n_frames")
+    if nf is not None:
+        return nf
+    if traj._frames is not None:
+        nf = traj._frames.count()
+        traj.__dict__["n_frames"] = nf  # exact: one row per frame
+        return nf
+    # the span is cached under its OWN key (never as n_frames — it is
+    # an upper bound, not the exact count), so repeated dispatches on
+    # a frames-less Trajectory scan coords once
+    hint = traj.__dict__.get("_nf_span_hint")
+    if hint is not None:
+        return hint
+    row = traj.coords.agg(
+        F.min("frame_id").alias("lo"), F.max("frame_id").alias("hi")
+    ).first()
+    hint = 0 if row["hi"] is None else int(row["hi"]) - int(row["lo"]) + 1
+    traj.__dict__["_nf_span_hint"] = hint
+    return hint
 
 
 def pairwise_rmsd_auto(

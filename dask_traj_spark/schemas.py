@@ -115,17 +115,6 @@ DISPLACEMENTS_SCHEMA = T.StructType(
     ]
 )
 
-# Array-per-frame result shape (the reference's native output: one
-# (n_pairs,) float32 row per frame — dask chunks `(chunk, n_pairs)`).
-# ~10x less serialization overhead than long format at high pair
-# counts; the scale-path default for vectorized results.
-DISTANCES_WIDE_SCHEMA = T.StructType(
-    [
-        T.StructField("frame_id", T.LongType(), False),
-        T.StructField("dists", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
 ANGLES_SCHEMA = T.StructType(
     [
         T.StructField("frame_id", T.LongType(), False),

@@ -29,6 +29,18 @@ def _xms_opt(driver_mem: str) -> str:
     return f"-Xms{half}{m.group(2)}"
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, capped at 48g: the host must be
+    able to reserve the heap (pre-sized by -Xms to half of it), or
+    the JVM exits before the session starts."""
+    cap_mb = 48 * 1024
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+        return f"{cap_mb}m"
+    return f"{min(ram // 4 // 2**20, cap_mb)}m"
+
+
 def get_spark(
     app_name: str = "dask-traj-spark",
     master: str | None = None,
@@ -39,9 +51,10 @@ def get_spark(
 
     ``SPARK_GRAFT_CPUS`` (driver contract) overrides local
     parallelism; on a real cluster ``master`` comes from
-    spark-submit and these configs still apply.
+    spark-submit and these configs still apply.  ``SPARK_DRIVER_MEM``
+    overrides the driver heap (default: :func:`_default_driver_mem`).
     """
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"

@@ -76,30 +76,41 @@ def test_forms_agree(traj_triclinic, pairs45):
     np.testing.assert_allclose(a, b, atol=ATOL)
 
 
-def test_box_join_path_matches_lookup_path(
-    traj_triclinic, traj_ortho, pairs45, monkeypatch
+def test_vectorized_periodic_on_unsorted_unpacked_scan(
+    spark, traj_triclinic, xyz_small, pairs45, box_triclinic
 ):
-    """Above BOX_JOIN_FRAMES the vectorized feed broadcast-joins box
-    COLUMNS instead of collecting the per-frame lookup through the
-    driver.  Force the switch (threshold -> 0) and require the two
-    paths bit-identical on both box classes, and require the joined
-    plan to really be a broadcast join (a shuffle join would destroy
-    the frame-packed layout the kernels depend on)."""
-    from dask_traj_spark.operators import distance as dmod
+    """An unpacked trajectory whose scan order is NOT frame-sorted
+    must still reach the kernels as complete, sorted frames with the
+    right per-frame box: the vectorized feed sorts within range
+    partitions, and nothing above it may let Catalyst drop that sort.
+    The rows are permuted in the source itself — a ``repartition``
+    would be collapsed into the feed's range exchange."""
+    from dask_traj_spark.trajectory import Trajectory
 
-    for traj in (traj_triclinic, traj_ortho):
-        want = _collect_dist(
-            compute_distances(traj, pairs45, periodic=True, form="vectorized")
-        )
-        traj.__dict__.pop("n_frames", None)
-        monkeypatch.setattr(dmod, "BOX_JOIN_FRAMES", 0)
-        df = compute_distances(traj, pairs45, periodic=True, form="vectorized")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-        got = _collect_dist(df)
-        monkeypatch.undo()
-        np.testing.assert_array_equal(got, want)
+    rows = traj_triclinic.coords.toPandas().sample(frac=1.0, random_state=0)
+    traj = Trajectory(
+        spark.createDataFrame(rows, schema=traj_triclinic.coords.schema),
+        unitcell=traj_triclinic.unitcell,
+    )
+    got = _collect_dist(
+        compute_distances(traj, pairs45, periodic=True, form="vectorized")
+    )
+    want = golden.distances(xyz_small, pairs45, box=box_triclinic)
+    np.testing.assert_allclose(got, want, atol=ATOL)
+
+
+@pytest.mark.parametrize("op", ["distances", "displacements", "angles", "dihedrals"])
+def test_unknown_form_rejected(traj_nocell, op):
+    from dask_traj_spark.operators import angle, distance
+
+    fn, idx = {
+        "distances": (distance.compute_distances, [(0, 1)]),
+        "displacements": (distance.compute_displacements, [(0, 1)]),
+        "angles": (angle.compute_angles, [(0, 1, 2)]),
+        "dihedrals": (angle.compute_dihedrals, [(0, 1, 2, 3)]),
+    }[op]
+    with pytest.raises(ValueError, match="form must be"):
+        fn(traj_nocell, idx, form="vectorised")
 
 
 def test_triclinic_mic_literal_box_tight(spark):

@@ -2250,8 +2250,7 @@ class TestAdviceR5Regressions:
         from dask_traj_spark.trajectory import Trajectory
 
         traj = Trajectory(coords)
-        feed, _ = _packed_input(traj, periodic=False,
-                                atoms=np.array([1, 2, 2, 4]))
+        feed = _packed_input(traj, atoms=np.array([1, 2, 2, 4]))
         atoms_fed = sorted(
             {int(r["x"]) % 10 for r in feed.collect()}
         )
